@@ -1,8 +1,9 @@
 """The measuring process of one benchmark run; run.py starts it and
-reads the record it writes. It imports the engine, sets up a Spark
-session (three times, see ``SETUPS``), runs the workload's passes for the
-requested seconds, then checks every collected output against its
-DuckDB reference.
+reads the record it writes. It imports the engine, sets up Spark twice
+(see ``SETUPS``), each time in a newly launched driver JVM, runs a cold
+pass and then warm passes for the requested seconds in the last
+session, and last checks every collected output against its DuckDB
+reference.
 """
 
 from __future__ import annotations
@@ -18,8 +19,10 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-# set-ups per run; setup_s reports their median
-SETUPS = 3
+# full set-ups per run, each in a newly launched JVM (JVM launch, first
+# get_spark, warm-up, the workload's set-up build); setup_s reports their
+# median. One costs 10-13 s on 4 cores, so more do not fit the run budget
+SETUPS = 2
 # stop starting passes after this many seconds since spawn, whatever
 # --seconds says, so the run always ends inside its 180 s budget
 PASS_DEADLINE_S = 120.0
@@ -72,30 +75,26 @@ class Run:
 
         self.builds = {"shingles": shingles, "ngram_pairs": _ngram_pairs, "ivf": _ivf_chain}
 
-    def setup(self) -> list[dict]:
+    def set_up(self) -> dict:
+        """One full set-up: launch a driver JVM through the first
+        ``get_spark``, run the warm-up query and the workload's set-up
+        build. Returns the sample's parts in seconds."""
         from workloads import WARMUP_QUERY
 
-        samples = []
-        spark = None
-        for k in range(SETUPS):
-            if spark is not None:
-                spark.stop()
-            with self.tracer.span("session", "setup", k=k):
-                a = _now()
-                with self.tracer.span("session", "get_spark"):
-                    spark = self.session.get_spark("perfbench")
-                b = _now()
-                with self.tracer.span("session", "warmup"):
-                    self.QUERIES[WARMUP_QUERY](spark, self.fx).write.format("noop").mode("overwrite").save()
-                    self.session.release_managed()
-                c = _now()
-                if self.w.setup_bars:
-                    with self.tracer.span("factors", "bars_table"):
-                        self.bars_table(spark, self.fx)
-                d = _now()
-            samples.append({"start_s": b - a, "warmup_s": c - b, "build_s": d - c, "total_s": d - a})
-        self.spark = spark
-        return samples
+        with self.tracer.span("session", "setup"):
+            a = _now()
+            with self.tracer.span("session", "get_spark"):
+                self.spark = self.session.get_spark("perfbench")
+            b = _now()
+            with self.tracer.span("session", "warmup"):
+                self.QUERIES[WARMUP_QUERY](self.spark, self.fx).write.format("noop").mode("overwrite").save()
+                self.session.release_managed()
+            c = _now()
+            if self.w.setup_bars:
+                with self.tracer.span("factors", "bars_table"):
+                    self.bars_table(self.spark, self.fx)
+            d = _now()
+        return {"start_s": b - a, "warmup_s": c - b, "build_s": d - c, "total_s": d - a}
 
     # -- operations ----------------------------------------------------------
     def run_query(self, name: str, p: int) -> None:
@@ -128,27 +127,35 @@ class Run:
             self.builds[name](self.spark, self.fx)
             return _now() - a
 
-    def run_replay(self, p: int) -> dict:
+    def run_replay(self, p: int) -> dict | None:
         """One replay of the seeded file split through both streaming
-        sinks, run concurrently; returns the pass's streaming stats."""
+        sinks, run concurrently; returns its streaming stats. Its outputs
+        are checked with the rest; it is not one of the timed operations."""
+        from pyspark.sql import functions as F
+
         spark, st = self.spark, self.streaming
         out_dir = os.path.join(self.args.work, f"replay_{p}")
         view = f"perfbench_bars_{p}"
-        rec = {"op": "replay", "pass": p}
-        outputs = None
-        stream = None
-        with self.tracer.span("op", "replay", pass_=p):
+        error = outputs = stream = None
+        with self.tracer.span("op", "replay", k=p):
             try:
                 a = _now()
                 with self.tracer.span("streaming", "start"):
-                    schema = spark.read.parquet(self.args.replay_input).schema
+                    raw_schema = spark.read.parquet(self.args.replay_input).schema
 
                     def source():
-                        return (
-                            spark.readStream.schema(schema)
+                        # built as streaming.stream_events builds its
+                        # stream, over the split files instead of the
+                        # single events file
+                        stream = (
+                            spark.readStream.schema(raw_schema)
+                            .format("parquet")
                             .option("maxFilesPerTrigger", "1")
-                            .parquet(self.args.replay_input)
+                            .load(self.args.replay_input)
                         )
+                        if dict(stream.dtypes).get("ts") == "bigint":
+                            stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+                        return stream
 
                     rollup_q = st.start_rollup_sink(source(), os.path.join(out_dir, "store"))
                     bars_q = (
@@ -175,54 +182,64 @@ class Run:
                             f"low, high, n_ticks, volume FROM {view}"
                         ).toArrow(),
                     }
-                c = _now()
-                rec.update(construct_s=0.0, exec_s=c - a, latency_s=c - a)
-                stream = _stream_stats(rollup_q, bars_q, c - a)
+                stream = _stream_stats(rollup_q, bars_q, _now() - a)
             except Exception as exc:  # noqa: BLE001 — a failing replay is counted, not fatal
-                rec["error"] = f"{type(exc).__name__}: {exc}"[:2000]
+                error = f"{type(exc).__name__}: {exc}"[:2000]
             finally:
                 spark.catalog.dropTempView(view)
                 shutil.rmtree(out_dir, ignore_errors=True)
-        self.ops.append(rec)
-        self.outputs.append(("replay", outputs, rec.get("error")))
+        self.outputs.append(("replay", outputs, error))
         return stream
 
     # -- timed region --------------------------------------------------------
-    def timed(self, spawn: float) -> None:
+    def run_pass(self, cold: bool, engine) -> None:
+        """Every operation of the workload once, in a new seeded order; a
+        cold pass first runs the workload's timed shared builds."""
+        p = len(self.passes)
+        before = engine.snapshot() if engine else None
+        info: dict = {"index": p, "cold": cold}
+        with self.tracer.span("pass", f"pass{p}", cold=cold):
+            a = _now()
+            if cold and self.w.timed_builds:
+                info["builds"] = {b: self.run_build(b) for b in self.w.timed_builds}
+            order = list(self.w.queries)
+            self.rng.shuffle(order)
+            for name in order:
+                self.run_query(name, p)
+            info["wall_s"] = _now() - a
+        if engine:
+            info["engine"] = engine.delta(before, engine.snapshot(), info["wall_s"])
+            if not cold and self.w.timed_builds:
+                # a repeat call of each shared build: a session-cache hit
+                for b in self.w.timed_builds:
+                    self.cache_hits.append(self.run_build(b))
+        self.passes.append(info)
+
+    def measure(self, spawn: float) -> list[dict]:
+        """``SETUPS`` full set-ups, each in a newly launched JVM; then, in
+        the last session, a cold pass, the settling passes, and counted
+        warm passes until ``--seconds`` have passed since the first of
+        them began and the workload's minimum has run. Returns the set-up
+        samples."""
         from tracing import EngineCounters
 
+        samples = []
+        for k in range(SETUPS):
+            if k:
+                _shutdown_jvm(self.spark)
+            samples.append(self.set_up())
         engine = EngineCounters(self.spark) if self.tracer.enabled else None
+        self.run_pass(True, engine)
+        for _ in range(self.w.settle_passes):
+            self.run_pass(False, engine)
         t_begin = _now()
-        p = 0
-        while True:
-            before = engine.snapshot() if engine else None
-            info: dict = {"index": p}
-            with self.tracer.span("pass", f"pass{p}", cold=p == 0):
-                a = _now()
-                if self.w.kind == "replay":
-                    stream = self.run_replay(p)
-                    if stream is not None:
-                        info["stream"] = stream
-                else:
-                    if p == 0 and self.w.timed_builds:
-                        info["builds"] = {b: self.run_build(b) for b in self.w.timed_builds}
-                    order = list(self.w.queries)
-                    self.rng.shuffle(order)
-                    for name in order:
-                        self.run_query(name, p)
-                info["wall_s"] = _now() - a
-            if engine:
-                info["engine"] = engine.delta(before, engine.snapshot(), info["wall_s"])
-                if p > 0 and self.w.timed_builds:
-                    # a repeat call of each shared build: a session-cache hit
-                    for b in self.w.timed_builds:
-                        self.cache_hits.append(self.run_build(b))
-            self.passes.append(info)
-            p += 1
-            if p > self.w.settle_passes + self.w.min_warm_passes and _now() - t_begin >= self.args.seconds:
-                break
-            if _now() - spawn >= PASS_DEADLINE_S:
-                break
+        counted = 0
+        while _now() - spawn < PASS_DEADLINE_S and (
+            counted < self.w.min_warm_passes or _now() - t_begin < self.args.seconds
+        ):
+            self.run_pass(False, engine)
+            counted += 1
+        return samples
 
     def scan_inputs(self) -> float:
         """sources layer: one full scan of every input table through
@@ -234,6 +251,19 @@ class Run:
                 self.load_table(self.spark, self.fx, t).write.format("noop").mode("overwrite").save()
                 total += _now() - a
         return total
+
+
+def _shutdown_jvm(spark) -> None:
+    """Stop the session and its driver JVM, so the next ``get_spark``
+    launches a new one. The JVM exits when its stdin closes."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    spark.stop()
+    SparkContext._gateway = SparkContext._jvm = None
+    gateway.shutdown()
+    gateway.proc.stdin.close()
+    gateway.proc.wait(timeout=60)
 
 
 def _stream_stats(rollup_q, bars_q, wall_s: float) -> dict:
@@ -267,8 +297,7 @@ def main() -> None:
     run = Run(args)
     run.import_engine()
     import_s = _now() - args.spawn
-    setups = run.setup()
-    run.timed(args.spawn)
+    setups = run.measure(args.spawn)
     record = {
         "import_s": import_s,
         "setups": setups,
@@ -283,6 +312,11 @@ def main() -> None:
             os.path.getsize(os.path.join(run.fx, f"{t}.parquet")) for t in run.w.inputs
         ) / 1e6
         record["cache_hits_s"] = run.cache_hits
+        if run.w.replay:
+            from workloads import TRACED_REPLAYS
+
+            streams = [run.run_replay(k) for k in range(TRACED_REPLAYS)]
+            record["streams"] = [st for st in streams if st is not None]
     run.spark.stop()
 
     # correctness: outside every timed interval

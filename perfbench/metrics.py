@@ -71,11 +71,15 @@ def _median(xs) -> float:
 
 def _warm(record: dict):
     """The counted warm passes and their successful operations: every
-    pass after the cold one and the settling passes."""
-    first = 1 + record["settle_passes"]
-    passes = [p for p in record["passes"] if p["index"] >= first]
-    ops = [o for o in record["ops"] if o["pass"] >= first and "error" not in o]
+    warm pass after the settling ones."""
+    passes = [p for p in record["passes"] if not p["cold"]][record["settle_passes"] :]
+    counted = {p["index"] for p in passes}
+    ops = [o for o in record["ops"] if o["pass"] in counted and "error" not in o]
     return passes, ops
+
+
+def _cold(record: dict) -> dict:
+    return next(p for p in record["passes"] if p["cold"])
 
 
 def end_to_end(record: dict) -> dict[str, float]:
@@ -84,7 +88,7 @@ def end_to_end(record: dict) -> dict[str, float]:
     return {
         "setup_s": record["import_s"] + _median(s["total_s"] for s in record["setups"]),
         "wall_s": _median(p["wall_s"] for p in warm_passes),
-        "cold_pass_s": record["passes"][0]["wall_s"],
+        "cold_pass_s": _cold(record)["wall_s"],
         "query_p50_s": _median(o["latency_s"] for o in warm_ops),
         "throughput_qps": len(warm_ops) / warm_wall if warm_wall > 0 else 0.0,
         "peak_rss_mb": record["peak_rss_mb"],
@@ -109,14 +113,15 @@ def per_layer(record: dict) -> dict[str, float]:
     reads 0."""
     out = {name: 0.0 for name in PER_LAYER}
     setups = record["setups"]
-    out["session.start_s"] = setups[0]["start_s"]
+    out["session.start_s"] = _median(s["start_s"] for s in setups)
     out["session.warmup_s"] = _median(s["warmup_s"] for s in setups)
     if record.get("setup_bars"):
         out["factors.bars_build_s"] = _median(s["build_s"] for s in setups)
     out["sources.scan_s"] = record.get("scan_s", 0.0)
     out["sources.input_mb"] = record.get("input_mb", 0.0)
 
-    cold_ops = [o for o in record["ops"] if o["pass"] == 0 and "error" not in o]
+    cold = _cold(record)
+    cold_ops = [o for o in record["ops"] if o["pass"] == cold["index"] and "error" not in o]
     _, warm_ops = _warm(record)
     out["plans.construct_s"] = sum(o["construct_s"] for o in cold_ops)
     out["plans.construct_p50_ms"] = 1000.0 * _median(o["construct_s"] for o in warm_ops)
@@ -126,7 +131,6 @@ def per_layer(record: dict) -> dict[str, float]:
         ("planning", "engine.physical_ms"),
     ):
         out[dst] = sum(o.get("phases", {}).get(src, 0.0) for o in cold_ops)
-    cold = record["passes"][0]
     for key, val in cold.get("engine", {}).items():
         out[f"engine.{key}"] = val
     out["engine.failed_tasks"] = sum(
@@ -136,7 +140,8 @@ def per_layer(record: dict) -> dict[str, float]:
         out[f"pipeline.{name}_build_s"] = secs
     out["pipeline.cache_hit_ms"] = 1000.0 * _median(record.get("cache_hits_s", []))
 
-    replays = [p["stream"] for p in _warm(record)[0] if "stream" in p]
+    # the first replay is cold
+    replays = record.get("streams", [])[1:]
     if replays:
         batches = [b for r in replays for b in r["batches"]]
         out["streaming.batches"] = _median(len(r["batches"]) for r in replays)

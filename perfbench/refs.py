@@ -14,7 +14,7 @@ reference table and prints ``oracle_check.compare()``'s diagnostics.
 
 Regenerate: delete ``perfbench/_cache/refs`` (or the whole
 ``perfbench/_cache``) and run ``python3 perfbench/refs.py``; the next
-benchmark run also rebuilds whatever is missing.
+benchmark run also rebuilds whatever is missing or stale.
 """
 
 from __future__ import annotations
@@ -30,19 +30,31 @@ import pyarrow as pa
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 CACHE = os.path.join(HERE, "_cache")
-FIXTURE_DIR = os.path.join(CACHE, "fixture")
+# a verbatim copy of the engine's sf0.001 test fixture (TESTDATA.md)
+FIXTURE_DIR = os.path.join(HERE, "sf0.001")
 REFS_DIR = os.path.join(CACHE, "refs")
 
 MEMORY_LIMIT = "3GB"
 THREADS = 4
 
 
-def _oracle_check():
+def _engine_path() -> None:
     if ROOT not in sys.path:
         sys.path.insert(0, ROOT)
+
+
+def _oracle_check():
+    _engine_path()
     from quantitative_database_and_visualization_platform_spark.plans import oracle_check
 
     return oracle_check
+
+
+def fixture_tables() -> tuple[str, ...]:
+    _engine_path()
+    from quantitative_database_and_visualization_platform_spark.sources.catalog import TABLES
+
+    return TABLES
 
 
 def digest(table: pa.Table) -> str:
@@ -71,8 +83,7 @@ def reference_key(signature: dict[str, str], sql: str) -> str:
 
 def reference_sql() -> dict[str, str]:
     """Oracle SQL for every output any workload checks."""
-    if ROOT not in sys.path:
-        sys.path.insert(0, ROOT)
+    _engine_path()
     from quantitative_database_and_visualization_platform_spark.plans import ORACLES
 
     from workloads import ROLLUP_SQL, WORKLOADS, bars_sql
@@ -118,11 +129,10 @@ def _run_duckdb(fixture_dir: str, tables, sql: str, tmp_dir: str) -> pa.Table:
 def build(fixture_dir: str = FIXTURE_DIR, refs_dir: str = REFS_DIR, log=print) -> dict:
     """Compute every missing or stale reference; return the index
     ``{name: {"key", "digest", "rows", "file"}}``."""
-    from fixture import TABLES
-
+    tables = fixture_tables()
     os.makedirs(refs_dir, exist_ok=True)
     tmp_dir = os.path.join(refs_dir, "duckdb_tmp")
-    sig = fixture_signature(fixture_dir, TABLES)
+    sig = fixture_signature(fixture_dir, tables)
     index = load_index(refs_dir)
     for name, sql in reference_sql().items():
         key = reference_key(sig, sql)
@@ -130,7 +140,7 @@ def build(fixture_dir: str = FIXTURE_DIR, refs_dir: str = REFS_DIR, log=print) -
         if entry and entry["key"] == key and os.path.exists(os.path.join(refs_dir, entry["file"])):
             continue
         t0 = time.monotonic()
-        table = _run_duckdb(fixture_dir, TABLES, sql, tmp_dir)
+        table = _run_duckdb(fixture_dir, tables, sql, tmp_dir)
         index[name] = write_reference(refs_dir, key, table)
         log(f"reference {name}: {table.num_rows} rows in {time.monotonic() - t0:.2f} s")
     tmp = _index_path(refs_dir) + ".tmp"
@@ -193,11 +203,13 @@ class Checker:
 
 
 def source_signature() -> str:
-    """Hash of every file that decides the fixture or an oracle's SQL:
-    the engine package's sources and this benchmark's own modules."""
+    """Hash of every file that decides a reference: the fixture, the
+    engine package's sources (the oracle SQL) and this benchmark's own
+    modules."""
     h = hashlib.sha256()
     engine = os.path.join(ROOT, "quantitative_database_and_visualization_platform_spark")
-    paths = [os.path.join(HERE, f) for f in ("fixture.py", "refs.py", "workloads.py")]
+    paths = [os.path.join(HERE, f) for f in ("refs.py", "workloads.py")]
+    paths += [os.path.join(FIXTURE_DIR, f) for f in os.listdir(FIXTURE_DIR)]
     for d, _, files in os.walk(engine):
         paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
     for p in sorted(paths):
@@ -208,21 +220,14 @@ def source_signature() -> str:
 
 
 def ensure(log=print) -> dict:
-    """Write the fixture if it is missing, then build missing references.
-    Skips the (engine-importing) key check when no source changed since
-    the last build."""
-    from fixture import TABLES, write_fixture
-
+    """Build missing or stale references. Skips the (engine-importing)
+    key check when no source changed since the last build."""
     stamp = os.path.join(REFS_DIR, "sources.sha256")
     current = source_signature()
-    have_fixture = all(os.path.exists(os.path.join(FIXTURE_DIR, f"{t}.parquet")) for t in TABLES)
-    if have_fixture and os.path.exists(stamp):
+    if os.path.exists(stamp):
         with open(stamp) as fh:
             if fh.read() == current:
                 return load_index()
-    if not have_fixture:
-        write_fixture(FIXTURE_DIR)
-        log(f"fixture written to {os.path.relpath(FIXTURE_DIR, ROOT)}")
     index = build(log=log)
     with open(stamp, "w") as fh:
         fh.write(current)

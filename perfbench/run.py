@@ -1,12 +1,12 @@
 """quantspark benchmark: one run of one workload.
 
-    python3 perfbench/run.py --workload quant_panel --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload quant_panel --seed 1 --seconds 10 --trace 0
 
-Run from the repository root. The first run in a checkout writes the
-fixture and computes the DuckDB references (perfbench/_cache); later
-runs reuse them. Each run:
+Run from the repository root. The first run in a checkout computes the
+DuckDB references of the bundled fixture (perfbench/sf0.001) into
+perfbench/_cache; later runs reuse them. Each run:
 
-1. makes its seeded inputs (the tick_replay file split),
+1. makes its seeded inputs (for a traced run, the tick stream's file split),
 2. starts child.py, which sets up Spark, runs the workload's passes for
    --seconds and checks every output against its reference,
 3. samples the resident memory of that process and its JVM meanwhile,
@@ -55,6 +55,20 @@ def _cpus() -> int:
 
 def _load() -> float:
     return round(os.getloadavg()[0], 2)
+
+
+def _cpu_ticks() -> list[int]:
+    """The aggregate ``cpu`` line of /proc/stat (user nice system idle
+    iowait irq softirq steal ...), in clock ticks."""
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:]]
+
+
+def _steal_share(a: list[int], b: list[int]) -> float:
+    """Share of CPU time the hypervisor gave to other guests between two
+    readings: contention the run cannot see otherwise."""
+    d = [y - x for x, y in zip(a, b)]
+    return round(d[7] / sum(d), 4) if sum(d) else 0.0
 
 
 def _versions() -> dict:
@@ -165,12 +179,15 @@ def _child_env(work: str) -> dict:
     env["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, env.get("PYTHONPATH")) if p)
     env.setdefault("SPARK_GRAFT_CPUS", str(_cpus()))
     env.setdefault("PYSPARK_PYTHON", sys.executable)
-    # Driver heap: the engine's own knob (default 8g) sets the ceiling;
-    # the JVM grows its heap toward it as GC timing dictates, so peak RSS
-    # wandered by 20-30% between identical runs. A fixed, pre-touched 2 GB
-    # heap (ample for the fixture) makes peak_rss_mb steady: it then
-    # moves with off-heap (codegen classes, threads) and Python memory;
-    # heap pressure shows as engine.gc_s.
+    # Driver heap: the engine's own knob (default 8g) sets the ceiling.
+    # The JVM grows its heap toward it as GC timing dictates, so peak RSS
+    # follows GC timing more than use: 20-30% apart between identical
+    # runs with 8g, 1,050-1,550 MB with a 2 GB ceiling, 2,390-2,610 MB
+    # with a fixed but untouched 2 GB heap. A fixed, pre-touched 2 GB heap
+    # (ample for the fixture) makes peak_rss_mb steady, at a price: the
+    # heap is a constant part of it, so it moves only with off-heap
+    # (generated classes, threads, buffers) and Python memory. Heap
+    # pressure shows as engine.gc_s and in the time metrics.
     env["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     # keep Spark's and Python's scratch files inside the checkout
     env["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
@@ -190,7 +207,7 @@ def _run_child(args, work: str, fixture_dir: str) -> dict:
     """Run child.py to completion (or kill it at the timeout) and return
     its record, with the sampled peak memory added."""
     replay_input = None
-    if WORKLOADS[args.workload].kind == "replay":
+    if args.trace and WORKLOADS[args.workload].replay:
         replay_input = os.path.join(work, "replay_input")
         split_events(fixture_dir, replay_input, args.seed)
     record_path = os.path.join(work, "record.json")
@@ -250,8 +267,9 @@ def main() -> None:
         _die(f"engine package not found at {os.path.relpath(ENGINE)}; run from the repository root")
 
     load_start = _load()
-    # fixture + references: their own bounded process, finished before
-    # anything is timed
+    ticks_start = _cpu_ticks()
+    # references: their own bounded process, finished before anything is
+    # timed
     prep = subprocess.run(
         [sys.executable, os.path.join(HERE, "refs.py")],
         cwd=ROOT,
@@ -259,7 +277,7 @@ def main() -> None:
         stdout=subprocess.DEVNULL,
     )
     if prep.returncode != 0:
-        _die("could not build the fixture or its references")
+        _die("could not build the references")
 
     from refs import FIXTURE_DIR
 
@@ -280,6 +298,7 @@ def main() -> None:
         "nproc": _cpus(),
         "load_1m_start": load_start,
         "load_1m_end": _load(),
+        "cpu_steal": _steal_share(ticks_start, _cpu_ticks()),
         **_versions(),
         "operations": record["attempted"],
         "passes": len(record["passes"]),
@@ -294,6 +313,8 @@ def main() -> None:
             "end_to_end": metrics.end_to_end(record),
             "per_layer": metrics.per_layer(record),
             **metrics.summary_only(record),
+            "import_s": record["import_s"],
+            "setups": record["setups"],
             "passes_wall_s": [p["wall_s"] for p in record["passes"]],
             "ops": [{k: o[k] for k in ("op", "pass", "latency_s") if k in o} for o in record["ops"]],
         }) + "\n")

@@ -80,18 +80,19 @@ def test_wrong_output_is_counted_as_failed(tmp_path):
 
 
 def _record(trace: bool) -> dict:
+    # a cold pass, a settling pass, two counted passes
     ops = [
         {"op": f"q{i}", "pass": p, "construct_s": 0.01 * (i + 1), "exec_s": 0.1, "latency_s": 0.1 + 0.01 * i}
-        for p in range(3)
+        for p in range(4)
         for i in range(4)
     ]
-    passes = [{"index": p, "wall_s": 1.0 + (p == 0)} for p in range(3)]
+    passes = [{"index": p, "cold": p == 0, "wall_s": (2.0, 1.5, 1.0, 1.0)[p]} for p in range(4)]
     if trace:
         ops[0]["phases"] = {"analysis": 5.0, "optimization": 7.0, "planning": 3.0}
         passes[0]["engine"] = {"jobs": 4, "codegen_compiles": 9, "task_s": 2.0, "failed_tasks": 0}
     return {
         "import_s": 2.0,
-        "setups": [{"start_s": s, "warmup_s": 0.5, "build_s": 0.2, "total_s": s + 0.7} for s in (6.0, 0.1, 0.2)],
+        "setups": [{"start_s": s, "warmup_s": 0.5, "build_s": 0.2, "total_s": s + 0.7} for s in (6.0, 5.0)],
         "setup_bars": True,
         "settle_passes": 1,
         "ops": ops,
@@ -113,7 +114,7 @@ def test_result_line_parses_and_names_every_metric_with_its_unit(trace):
     spec = _benchmark_json()["per_layer" if trace else "end_to_end"]
     out = json.loads(metrics.result_line(_record(trace), trace))
     assert set(out) == {"correct", "attempted", "failed", "metrics"}
-    assert out["correct"] is True and out["attempted"] == 12 and out["failed"] == 0
+    assert out["correct"] is True and out["attempted"] == 16 and out["failed"] == 0
     assert {m["name"]: m["unit"] for m in spec} == {k: v["unit"] for k, v in out["metrics"].items()}
     assert all(isinstance(v["value"], (int, float)) for v in out["metrics"].values())
 
@@ -132,37 +133,38 @@ def test_summary_lines_name_every_end_to_end_metric_with_its_unit():
 
 def test_end_to_end_arithmetic():
     e2e = metrics.end_to_end(_record(False))
-    # import + median of the three set-ups (0.8, 0.9, 6.7)
-    assert e2e["setup_s"] == pytest.approx(2.0 + 0.9)
+    # import + median of the two set-ups (6.7, 5.7)
+    assert e2e["setup_s"] == pytest.approx(2.0 + 6.2)
     assert e2e["cold_pass_s"] == 2.0
+    # pass 1 settles; passes 2 and 3 are counted
     assert e2e["wall_s"] == 1.0
-    # pass 1 settles; pass 2 alone is counted
-    assert e2e["throughput_qps"] == pytest.approx(4 / 1.0)
+    assert e2e["throughput_qps"] == pytest.approx(8 / 2.0)
     assert e2e["query_p50_s"] == pytest.approx(0.115)
 
 
-def test_fixture_is_deterministic():
-    import fixture
-
-    a, b = fixture.build_tables(), fixture.build_tables()
-    assert all(a[t].equals(b[t]) for t in fixture.TABLES)
-    assert a["events"].column("ts").to_pylist() == sorted(a["events"].column("ts").to_pylist())
+def test_per_layer_reads_the_cold_pass():
+    layer = metrics.per_layer(_record(True))
+    assert layer["engine.jobs"] == 4 and layer["engine.analysis_ms"] == 5.0
+    assert layer["plans.construct_s"] == pytest.approx(0.01 + 0.02 + 0.03 + 0.04)
+    assert layer["session.start_s"] == pytest.approx(5.5)
 
 
 def test_replay_split_is_seeded_and_chronological(tmp_path):
     import pyarrow.parquet as pq
 
-    import fixture
     from run import split_events
 
-    fixture.write_fixture(str(tmp_path / "fx"))
-
     def files(seed, d):
-        split_events(str(tmp_path / "fx"), str(tmp_path / d), seed)
+        split_events(refs.FIXTURE_DIR, str(tmp_path / d), seed)
         names = sorted(os.listdir(tmp_path / d))
-        return [pq.read_table(tmp_path / d / n).column("event_id").to_pylist() for n in names]
+        return [pq.read_table(tmp_path / d / n) for n in names]
 
     one, again, other = files(7, "a"), files(7, "b"), files(8, "c")
-    assert one == again and one != other
-    flat = [e for f in one for e in f]
-    assert flat == sorted(flat) and len(flat) == fixture.N_EVENTS
+    ids = [[t.column("event_id").to_pylist() for t in f] for f in (one, again, other)]
+    assert ids[0] == ids[1] and ids[0] != ids[2]
+    # every event once, files in event-time order, the source's ts type kept
+    events = pq.read_table(os.path.join(refs.FIXTURE_DIR, "events.parquet"))
+    assert sorted(e for f in ids[0] for e in f) == sorted(events.column("event_id").to_pylist())
+    ts = [t.column("ts").to_pylist() for t in one]
+    assert all(max(a) <= min(b) for a, b in zip(ts, ts[1:]))
+    assert all(t.schema.field("ts").type == events.schema.field("ts").type for t in one)

@@ -42,9 +42,12 @@ PIPELINE_BUILDS = ("shingles", "ngram_pairs", "ivf")
 # the engine's warm-up query, as in bench.py
 WARMUP_QUERY = "global_market_stats"
 
-# tick_replay: the events stream is cut at seeded points into this many
-# files, replayed one file per micro-batch
+# The tick stream replay (quant_panel's traced run): the events table is
+# cut at seeded points into this many files, replayed one file per
+# micro-batch; the first replay is cold and left out of the streaming
+# medians
 REPLAY_FILES = 2
+TRACED_REPLAYS = 2
 
 # Streaming references. The rollup store must equal a from-scratch rollup
 # of every event; the bars must equal the batch tick_bars_minute rows
@@ -71,18 +74,21 @@ def bars_sql(tick_bars_oracle: str) -> str:
 @dataclass(frozen=True)
 class Workload:
     name: str
-    kind: str  # "queries" or "replay"
-    queries: tuple[str, ...] = ()
+    queries: tuple[str, ...]
     # tables the workload reads (sources.input_mb, sources.scan_s)
     inputs: tuple[str, ...] = ()
     setup_bars: bool = False
     timed_builds: tuple[str, ...] = ()
-    # passes after the cold one that still show JIT warm-up (measured:
-    # the first warm quant_panel pass ran 3.4-4.5 s, the next ones
-    # 2.9-3.5 s); they run but are left out of the warm statistics
-    settle_passes: int = 1
+    # the traced run replays the tick stream after the timed passes
+    # (the streaming layer's metrics)
+    replay: bool = False
+    # warm passes that still show JIT warm-up in the young JVM; they run
+    # but are left out of the warm statistics (measured over eight warm
+    # passes: quant_panel 3.3-4.4 s for the first, falling to 2.1-2.6 s
+    # by the eighth; llm_dedup 2.3-2.9 s falling to 1.6-2.2 s)
+    settle_passes: int = 2
     # counted warm passes a run makes at least, whatever --seconds says
-    min_warm_passes: int = 2
+    min_warm_passes: int = 3
 
 
 WORKLOADS: dict[str, Workload] = {
@@ -90,19 +96,16 @@ WORKLOADS: dict[str, Workload] = {
     for w in (
         Workload(
             "quant_panel",
-            "queries",
             QUANT_PANEL_QUERIES,
             inputs=("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events"),
             setup_bars=True,
+            replay=True,
         ),
         Workload(
             "llm_dedup",
-            "queries",
             LLM_DEDUP_QUERIES,
             inputs=("documents", "embeddings"),
             timed_builds=PIPELINE_BUILDS,
         ),
-        # one replay costs several seconds: a single warm pass is the floor
-        Workload("tick_replay", "replay", inputs=("events",), settle_passes=0, min_warm_passes=1),
     )
 }
