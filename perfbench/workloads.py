@@ -106,6 +106,9 @@ WORKLOADS: dict[str, Workload] = {
             LLM_DEDUP_QUERIES,
             inputs=("documents", "embeddings"),
             timed_builds=PIPELINE_BUILDS,
+            # dedup_containment, most of a warm pass, is still falling by
+            # a third over the first six warm passes
+            settle_passes=3,
         ),
     )
 }
