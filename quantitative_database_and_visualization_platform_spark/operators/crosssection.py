@@ -39,11 +39,6 @@ def cs_rank(x: ColumnOrName, date: str = "trade_date") -> Column:
     return F.when(c.isNotNull(), avg_rank / n)
 
 
-def cs_percent_rank(x: ColumnOrName, date: str = "trade_date") -> Column:
-    """SQL percent_rank within a date — used where the oracle is ANSI SQL."""
-    return F.percent_rank().over(Window.partitionBy(date).orderBy(_col(x)))
-
-
 def with_cs_rank_block(
     df, specs: dict[str, str], date: str = "trade_date", keep: tuple[str, ...] | None = None
 ):

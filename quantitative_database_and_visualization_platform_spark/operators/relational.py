@@ -44,21 +44,12 @@ def semi_join_pool(df: DataFrame, pool: DataFrame, on: str | Sequence[str]) -> D
     return df.join(pool, on=on, how="left_semi")
 
 
-def anti_join_pool(df: DataFrame, pool: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    return df.join(pool, on=on, how="left_anti")
-
-
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     """ORDER BY ... LIMIT k — Spark plans TakeOrderedAndProject: each
     partition keeps k rows, the driver merges; no global sort at scale
     (`QuantDB.py:154,200,433`). Include a unique tie-break column in
     `order` for deterministic results."""
     return df.orderBy(*order).limit(k)
-
-
-def top_k_per_group(df: DataFrame, group: Sequence[str], order: Sequence[Column], k: int) -> DataFrame:
-    w = Window.partitionBy(*group).orderBy(*order)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
 
 
 def weighted_euclidean(pairs: Sequence[tuple[Column, float, float]]) -> Column:
@@ -71,25 +62,6 @@ def weighted_euclidean(pairs: Sequence[tuple[Column, float, float]]) -> Column:
         # is the identical IEEE op DuckDB runs.
         acc = acc + d * d
     return F.sqrt(acc)
-
-
-def prev_row_change(
-    df: DataFrame,
-    value: str,
-    partition: Sequence[str],
-    order: Sequence[str],
-    out_prefix: str = "",
-) -> DataFrame:
-    """Today vs previous row: the reference's self-join on
-    `max(trade_date) < d` (`QuantDB.py:358-369`) re-expressed as lag() —
-    one window instead of a join against a scalar subquery."""
-    w = Window.partitionBy(*partition).orderBy(*order)
-    prev = F.lag(value).over(w)
-    cur = F.col(value)
-    pct = F.when(prev > 0, (cur - prev) / prev * 100).otherwise(F.lit(0.0))
-    return df.withColumn(f"{out_prefix}prev_{value}", prev).withColumn(
-        f"{out_prefix}{value}_pct_chg", pct
-    )
 
 
 def salted_join(
@@ -263,42 +235,6 @@ def latest_row_per_key(
     """
     w = Window.partitionBy(*key).orderBy(*[v.desc() for v in version])
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-def window_slice_around(
-    df: DataFrame,
-    entity: str,
-    order: str,
-    center_predicate: Column,
-    n_before: int,
-    n_after: int,
-    norm_col: str | None = None,
-) -> DataFrame:
-    """±N *rows* around a center row per entity, with values normalized to
-    the center row — the K-line similarity window (`QuantDB.py:204-224`).
-
-    Emits `day_offset` (0 at the center) and, if norm_col is given,
-    `norm_{norm_col}` = value / center value.
-    """
-    w = Window.partitionBy(entity).orderBy(order)
-    rn = F.row_number().over(w)
-    df = df.withColumn("__rn", rn)
-    center = df.filter(center_predicate).select(
-        F.col(entity).alias("__e"),
-        F.col("__rn").alias("__center_rn"),
-        *( [F.col(norm_col).alias("__center_val")] if norm_col else [] ),
-    )
-    # no broadcast hint: center has one row per entity — unbounded in the
-    # entity count — so a forced broadcast is an OOM at scale; AQE will
-    # still broadcast it at runtime when it actually fits.
-    out = (
-        df.join(center, on=df[entity] == center["__e"], how="inner")
-        .withColumn("day_offset", F.col("__rn") - F.col("__center_rn"))
-        .filter((F.col("day_offset") >= -n_before) & (F.col("day_offset") <= n_after))
-    )
-    if norm_col:
-        out = out.withColumn(f"norm_{norm_col}", F.col(norm_col) / F.col("__center_val"))
-    return out.drop("__e", "__rn", "__center_rn", "__center_val")
 
 
 def _idiv(a: Column, b: Column) -> Column:

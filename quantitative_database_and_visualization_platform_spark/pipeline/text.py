@@ -85,16 +85,6 @@ def o_text_features(stopwords: tuple[str, ...] = EN_STOPWORDS) -> dict[str, str]
     }
 
 
-def token_histogram(df: DataFrame, text: str = "text") -> DataFrame:
-    """Corpus-level token frequency (the vocabulary scan): explode +
-    groupBy — one shuffle keyed by token."""
-    return (
-        df.select(F.explode(F.split(normalized_text(text), " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-
-
 def tfidf_scores(docs: DataFrame, text: str = "text") -> DataFrame:
     """Per-(doc, term) TF-IDF: tf × ln(N/df), idf pre-rounded to 9 dp so
     the one-ulp libm-vs-JVM LN divergence cannot flip a downstream

@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 
 from ..factors.alpha101 import ALPHA_COLS, with_alphas
 from ..factors.panel import O_BARS, bars_table
-from ..session import context_key
+from ..session import aqe_off, session_table
+from ..sources.catalog import table_path
 from .oracle_prune import prune_alpha_oracle
 from .registry import query
 
@@ -1176,30 +1177,21 @@ def _ic_scan(spark: SparkSession, sf_dir: str, cols: list[str]) -> DataFrame:
     )
 
 
-# The full-width IC result is computed ONCE per (session, sf_dir) and
-# shared by alpha_ic_scan and the four gate splits — valid because every
-# IC row is per-factor independent (r_f is ranked per (date, factor),
-# r_r per date on the wide panel, corr per (factor, date) group), so a
-# factor-subset scan and a row filter of the full scan are the same
-# relation. The cached table is 101 rows × 3 columns.
-_IC_CACHE: dict[tuple[tuple[str, int], str], DataFrame] = {}
-
-
+# The full-width IC result is computed ONCE per session and events
+# version (a `session_table`) and shared by alpha_ic_scan and the four
+# gate splits — valid because every IC row is per-factor independent
+# (r_f is ranked per (date, factor), r_r per date on the wide panel, corr
+# per (factor, date) group), so a factor-subset scan and a row filter of
+# the full scan are the same relation. The table is 101 rows × 3 columns.
 def _ic_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (context_key(spark), sf_dir)
-    df = _IC_CACHE.get(key)
-    if df is None:
+    def build() -> DataFrame:
         df = _ic_scan(spark, sf_dir, list(ALPHA_COLS))
         # same convention as _alpha_table: truncate lineage so the five
         # derived queries read a leaf plan, AQE off for the build job
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            df = df.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-        _IC_CACHE[key] = df
-    return df
+        with aqe_off(spark):
+            return df.localCheckpoint(eager=True)
+
+    return session_table(spark, "alpha_ic", (table_path(sf_dir, "events"),), (sf_dir,), build)
 
 
 @query("alpha_ic_scan")  # rows-only at the gate; full-width oracle in pytest
@@ -1253,19 +1245,15 @@ def _register_ic_gate_parts() -> None:
 _register_ic_gate_parts()
 
 
-# The rounded alpha table is MATERIALIZED once per (session, sf_dir) and
-# shared by alpha101_subset and alpha_ic_scan — the Spark analog of the
-# reference's precomputed factor_db (`database_schema.md:271`): the IC
-# scan reads the factor table, it does not re-run the factor DAG. The
-# cached table is (code, d, 101 doubles) — a few MB at bench scale — and
-# is deliberately kept for the life of the session.
-_ALPHA_CACHE: dict[tuple[tuple[str, int], str], DataFrame] = {}
-
-
+# The rounded alpha table is MATERIALIZED once per session and events
+# version (a `session_table`) and shared by alpha101_subset and
+# alpha_ic_scan — the Spark analog of the reference's precomputed
+# factor_db (`database_schema.md:271`): the IC scan reads the factor
+# table, it does not re-run the factor DAG. The table is (code, d, 101
+# doubles) — a few MB at bench scale — and is deliberately kept for the
+# life of the session.
 def _alpha_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (context_key(spark), sf_dir)
-    df = _ALPHA_CACHE.get(key)
-    if df is None:
+    def build() -> DataFrame:
         # Fail FAST on a heap that cannot fit the 101-alpha build: a
         # 1.07 GB local-mode driver demonstrably OOM-KILLS the whole
         # SparkContext mid-build (r9 rehearsal; verified at both 32 and
@@ -1348,14 +1336,10 @@ def _alpha_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         #   reads it back (`database_schema.md:271`); a production run
         #   would write parquet here (with_alphas(checkpoint_dir=…) is
         #   that path), the in-memory form is its bench twin.
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            df = df.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-        _ALPHA_CACHE[key] = df
-    return df
+        with aqe_off(spark):
+            return df.localCheckpoint(eager=True)
+
+    return session_table(spark, "alpha", (table_path(sf_dir, "events"),), (sf_dir,), build)
 
 
 @query("alpha101_subset")  # rows-only at the gate; full-width oracle in pytest

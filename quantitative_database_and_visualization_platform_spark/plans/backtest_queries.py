@@ -1962,24 +1962,22 @@ def top_correlated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the SRP-bucket neighborhoods in embedding_dbscan_core.
 #
 # The universe count is one driver-side metadata-cheap aggregate per
-# (session, sf_dir), memoized — an index-build parameter, same class as
-# the dedup family's _n_docs.
+# session and events version (a `session_table`) — an index-build
+# parameter, same class as the dedup family's _n_docs.
 # ---------------------------------------------------------------------------
 _PAIR_BLOCK_TARGET = 32  # names per block; block count = ceil(universe/32)
 
-_NCODES_CACHE: dict[tuple, int] = {}
-
-
 def _n_codes(spark: SparkSession, sf_dir: str) -> int:
-    from ..session import context_key
-    from ..sources.catalog import load_table
+    from ..session import session_table
+    from ..sources.catalog import load_table, table_path
 
-    key = (context_key(spark), sf_dir)
-    n = _NCODES_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "events").select("user_id").distinct().count()
-        _NCODES_CACHE[key] = n
-    return n
+    return session_table(
+        spark,
+        "n_codes",
+        (table_path(sf_dir, "events"),),
+        (sf_dir,),
+        lambda: load_table(spark, sf_dir, "events").select("user_id").distinct().count(),
+    )
 
 
 def _pair_blocks(spark: SparkSession, sf_dir: str) -> int:

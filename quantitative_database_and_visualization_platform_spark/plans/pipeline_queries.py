@@ -34,8 +34,8 @@ from ..operators.relational import global_ntile
 from ..pipeline.multimodal import decode_documents
 from ..pipeline import sketches as sk
 from ..pipeline.text import o_text_features, tfidf_scores, with_text_features
-from ..session import checkpoint_sized, context_key, managed_persist
-from ..sources.catalog import load_table, path_sig
+from ..session import checkpoint_sized, managed_persist, session_table
+from ..sources.catalog import load_table, table_path
 from .registry import o_round6, query, round6
 
 
@@ -48,15 +48,14 @@ from .registry import o_round6, query, round6
 # from scratch per execution; semdedup additionally evaluated the
 # centroid subtree twice (once inside the reassignment, once in its
 # broadcast join). This is the "build the index once, probe many" shape
-# a production vector store gives for free; the leaves adopt the
-# bars_table/_alpha_table convention: computed from parquet inside the
-# FIRST consumer's timed region per (session, sf_dir, embeddings-file
-# signature), localCheckpoint leaves sized by checkpoint_sized, never
-# persisted across runs. The chain is bit-deterministic (floor-quantized
-# distances, fixed-point centroid means), so every consumer's oracle
-# hash is unchanged by construction.
+# a production vector store gives for free. The leaves are one
+# `session_table` keyed on the embeddings file's signature: computed from
+# parquet inside the FIRST consumer's timed region per session and
+# embeddings version, localCheckpoint leaves sized by checkpoint_sized,
+# never persisted across runs. The chain is bit-deterministic
+# (floor-quantized distances, fixed-point centroid means), so every
+# consumer's oracle hash is unchanged by construction.
 # ---------------------------------------------------------------------------
-_IVF_CHAIN_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 # unsafe-row estimate for an assigned-embedding row: 64 float64 dims in
 # an UnsafeArray + id/label/cid + overhead; sizing only, never correctness
@@ -66,12 +65,7 @@ _EMB_ROW_BYTES = 600
 def _ivf_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(assigned, cents): the reassigned corpus (every embeddings column
     + `cid`) and the refined centroid table (`__cid`, `__cent`)."""
-    import os
-
-    sig = path_sig(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (context_key(spark), sf_dir, sig)
-    hit = _IVF_CHAIN_CACHE.get(key)
-    if hit is None:
+    def build() -> tuple[DataFrame, DataFrame]:
         # failed embeddings (NULL array) are not indexed: a NULL seed/
         # probe distance wins Spark's argmin (nulls-first) while DuckDB
         # ranks it last (r13 NULL-saturated sweep; `vecs` CTE oracle-side)
@@ -95,10 +89,9 @@ def _ivf_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         assigned = checkpoint_sized(
             spark, nearest_centroid(emb, cents, "embedding", "vec_id"), _EMB_ROW_BYTES
         )
-        for k in [k for k in _IVF_CHAIN_CACHE if k[:2] == key[:2]]:
-            del _IVF_CHAIN_CACHE[k]
-        _IVF_CHAIN_CACHE[key] = hit = (assigned, cents)
-    return hit
+        return assigned, cents
+
+    return session_table(spark, "ivf_chain", (table_path(sf_dir, "embeddings"),), (sf_dir,), build)
 
 
 # ---------------------------------------------------------------------------
@@ -108,14 +101,13 @@ def _ivf_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 # pass per execution (measured 0.62 s recompute vs 0.075 s leaf read at
 # sf0.1). A production pipeline checkpoints this shingle table to
 # parquet once (the line-209 block comment already said so); the leaf is
-# its in-session twin, keyed per (session, sf_dir, documents-file
-# signature, k, distinct) and built inside the first consumer's timed
-# region. The floor is defaultParallelism, NOT the small bars floor:
+# its in-session twin, a `session_table` keyed per (sf_dir, k, distinct)
+# and the documents file's signature, built inside the first consumer's
+# timed region. The floor is defaultParallelism, NOT the small bars floor:
 # shingle consumers do heavy per-row CPU (20 salted md5s per shingle in
 # the MinHash build) in the stage that rides leaf partitioning, which is
 # exactly why the old call sites repartitioned before deriving.
 # ---------------------------------------------------------------------------
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
 
 # sizing-only estimate: ~doc-length of distinct k-gram strings per row
 _SHINGLE_ROW_BYTES = 8000
@@ -126,26 +118,23 @@ def _shingles_table(
 ) -> DataFrame:
     """All `documents` columns + `shingles` (the k-word shingle array of
     the normalized text), materialized once per (session, sf_dir, k,
-    distinct). Bit-identical to `dd.with_shingles` on the raw table."""
-    import os
-
-    sig = path_sig(os.path.join(sf_dir, "documents.parquet"))
-    key = (context_key(spark), sf_dir, sig, k, distinct)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
+    distinct) and documents version. Bit-identical to `dd.with_shingles`
+    on the raw table."""
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism
         )
-        df = checkpoint_sized(
+        return checkpoint_sized(
             spark,
             dd.with_shingles(docs, k=k, distinct=distinct),
             _SHINGLE_ROW_BYTES,
             floor=spark.sparkContext.defaultParallelism,
         )
-        for kk in [kk for kk in _SHINGLE_CACHE if kk[:2] == key[:2] and kk[3:] == key[3:]]:
-            del _SHINGLE_CACHE[kk]
-        _SHINGLE_CACHE[key] = df
-    return df
+
+    return session_table(
+        spark, "shingles", (table_path(sf_dir, "documents"),), (sf_dir, k, distinct), build
+    )
+
 
 # normalized text + word/shingle CTEs shared by the dedup oracles
 _O_NORM = """
@@ -311,54 +300,46 @@ def _o_ngram_jaccard() -> str:
     """
 
 
-# The verified n-gram-Jaccard pair relation is computed ONCE per
-# (session, sf_dir) and shared by dedup_ngram_jaccard,
-# dedup_connected_components, and neardup_canonical — the Spark analog
-# of materializing the pair table a dedup pipeline would checkpoint
-# before clustering. localCheckpoint (NOT managed_persist): the cache
-# must survive bench.py's per-query release_managed(), same convention
-# as the alpha table.
-_PAIR_CACHE: dict[tuple[tuple[str, int], str], DataFrame] = {}
-
-
-# memoized per (session, sf_dir) like _PAIR_CACHE: several dedup query
-# builds call _n_docs more than once (twice in _ngram_pairs, twice in
-# dedup_containment), and the count is a table property, not per-query
-_NDOCS_CACHE: dict[tuple[tuple[str, int], str], int] = {}
-
-
 def _n_docs(spark: SparkSession, sf_dir: str) -> int:
     """Exact document count for the size-aware join-strategy choice in
     the dedup helpers (dd.BROADCAST_SAFE_DOCS): one parquet-metadata
-    count job per (session, sf_dir), memoized — no data scan, and no
-    repeat job when multiple dedup queries (or one query's multiple
-    helper stages) ask again in the same session."""
-    key = (context_key(spark), sf_dir)
-    n = _NDOCS_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        _NDOCS_CACHE[key] = n
-    return n
+    count job per session and documents version (a `session_table`) — no
+    data scan, and no repeat job when multiple dedup queries (or one
+    query's multiple helper stages: twice in _ngram_pairs, twice in
+    dedup_containment) ask again in the same session."""
+    return session_table(
+        spark,
+        "n_docs",
+        (table_path(sf_dir, "documents"),),
+        (sf_dir,),
+        lambda: load_table(spark, sf_dir, "documents").count(),
+    )
 
 
 def _n_vecs(spark: SparkSession, sf_dir: str) -> int:
-    """Exact embeddings count, memoized like :func:`_n_docs` — one
-    parquet-metadata count job per (session, sf_dir). Used for the
-    size-aware join-strategy choice in the embedding family and for
-    `planes_for_corpus` index sizing (an index-build parameter: at
+    """Exact embeddings count, kept like :func:`_n_docs` — one
+    parquet-metadata count job per session and embeddings version. Used
+    for the size-aware join-strategy choice in the embedding family and
+    for `planes_for_corpus` index sizing (an index-build parameter: at
     100 TB this is one metadata read, not a scan)."""
-    key = (context_key(spark), sf_dir, "embeddings")
-    n = _NDOCS_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "embeddings").count()
-        _NDOCS_CACHE[key] = n
-    return n
+    return session_table(
+        spark,
+        "n_vecs",
+        (table_path(sf_dir, "embeddings"),),
+        (sf_dir,),
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
 
 
+# The verified n-gram-Jaccard pair relation is computed ONCE per session
+# and documents version (a `session_table`) and shared by
+# dedup_ngram_jaccard, dedup_connected_components, and neardup_canonical
+# — the Spark analog of materializing the pair table a dedup pipeline
+# would checkpoint before clustering. localCheckpoint (NOT
+# managed_persist): the table must survive bench.py's per-query
+# release_managed(), same convention as the alpha table.
 def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (context_key(spark), sf_dir)
-    df = _PAIR_CACHE.get(key)
-    if df is None:
+    def build() -> DataFrame:
         # same Generate-collapse discipline as dedup_minhash_lsh: the
         # shared shingle leaf is the barrier before any explode
         shingled = _shingles_table(spark, sf_dir).select("doc_id", "shingles")
@@ -371,14 +352,16 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = dd.prefix_filter_candidates(
             pref, _NGRAM_T, n_docs=_n_docs(spark, sf_dir)
         )
-        df = dd.jaccard_verified_pairs(
+        return dd.jaccard_verified_pairs(
             cand,
             shingled.select("doc_id", "shingles"),
             threshold=_NGRAM_T,
             n_docs=_n_docs(spark, sf_dir),
         ).localCheckpoint(eager=True)
-        _PAIR_CACHE[key] = df
-    return df
+
+    return session_table(
+        spark, "ngram_pairs", (table_path(sf_dir, "documents"),), (sf_dir,), build
+    )
 
 
 @query("dedup_ngram_jaccard", oracle=_o_ngram_jaccard())

@@ -15,8 +15,14 @@ chosen to also be correct on a large cluster:
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
+from contextlib import contextmanager
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 
 def cpu_count() -> int:
@@ -89,41 +95,10 @@ def _quiet_window_warnings(spark: SparkSession) -> SparkSession:
 # many queries those cached blocks would otherwise accumulate and pressure
 # executor memory. Builders register via managed_persist; harnesses
 # (bench.py, oracle_check) call release_managed() after each query's
-# action completes. Deliberately-session-lived caches (the materialized
-# alpha table) use a plain persist() and are NOT registered.
+# action completes. Deliberately session-lived leaves (bars, alpha,
+# shingles, ...) live in `session_table` and are NOT registered.
 
 _MANAGED: list = []
-
-
-def checkpoint_sized(spark, df, row_bytes: int, floor: int = 4):
-    """Eager localCheckpoint re-materialized at a data-sized partition
-    count (~64 MB of rows per partition, floored at
-    min(defaultParallelism, floor)).
-
-    A raw checkpoint leaf inherits shuffle.partitions from its build —
-    a core-count constant — so every downstream scan of a small panel
-    becomes a micro-task storm (r13: cointegration_screen 6.0 s on a
-    32-partition 4 MB leaf vs 1.9 s at 4); a 1-partition leaf serializes
-    broadcast-build chains that ride leaf parallelism with no exchange
-    (8.7 s). The coalesce is RE-CHECKPOINTED because a lazy Coalesce
-    over raw blocks measured 1.7x slower than physically merged blocks
-    (interleaved A/B, same session). AQE is off for the build jobs
-    (re-planning overhead only; the leaf is consumed under AQE).
-    `row_bytes` is a per-row unsafe-format estimate used only for
-    SIZING, never correctness."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        leaf = df.localCheckpoint(eager=True)
-        target = max(
-            min(spark.sparkContext.defaultParallelism, floor),
-            -(-leaf.count() * row_bytes // (64 << 20)),
-        )
-        if target < leaf.rdd.getNumPartitions():
-            leaf = leaf.coalesce(target).localCheckpoint(eager=True)
-        return leaf
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def managed_persist(df):
@@ -140,8 +115,34 @@ def release_managed() -> None:
             pass
 
 
+# --- session tables -----------------------------------------------------------
+# Shared tables are materialized once per session and read back as leaves
+# (Shark's in-memory table store): the daily-bar panel, the alpha/IC
+# tables, shingles, n-gram pairs, the IVF chain, the catalog's analyzed
+# plans and the counts derived from them all live in `session_table`.
+
+_tables: dict[tuple, tuple[tuple, object]] = {}
+_tables_ctx: tuple | None = None
+
+
+def path_sig(path: str) -> tuple:
+    """Cheap content signature: (mtime_ns, size) of the file, or of every
+    direct child of a directory — an in-place rewrite changes it."""
+    try:
+        st = os.stat(path)
+        if not os.path.isdir(path):
+            return (st.st_mtime_ns, st.st_size)
+        with os.scandir(path) as it:
+            entries = sorted((e.name, e.stat().st_mtime_ns, e.stat().st_size) for e in it)
+        return tuple(entries)
+    except OSError:
+        # missing path: let the reader raise its own (Spark) error
+        return ("<missing>",)
+
+
 def context_key(spark: SparkSession) -> tuple[str, int]:
-    """Stable identity for session-scoped caches (_ALPHA_CACHE and kin).
+    """Stable identity of the SparkContext that `session_table` entries
+    belong to.
 
     ``id(spark.sparkContext)`` is NOT stable: after a context is stopped
     and garbage-collected, CPython can reuse the same id for a new
@@ -151,6 +152,109 @@ def context_key(spark: SparkSession) -> tuple[str, int]:
     """
     sc = spark.sparkContext
     return (sc.applicationId, sc.startTime)
+
+
+def session_table(
+    spark: SparkSession, name: str, inputs: tuple[str, ...], params: tuple, build: Callable[[], _T]
+) -> _T:
+    """``build()``'s value, built once per session and input version.
+
+    One entry is kept per (name, params) for the live SparkContext,
+    stored with the `path_sig` of every path in `inputs` — the parquet
+    files the value derives from. A call whose input signatures all
+    match returns the stored value; otherwise it rebuilds and replaces
+    the entry, so a file rewritten in place is never served stale and the
+    superseded build is dropped. Entries of a stopped context are dropped
+    when a new context first uses the store: PySpark runs one
+    SparkContext per process, so they can never be served again."""
+    global _tables_ctx
+    ctx = context_key(spark)
+    if ctx != _tables_ctx:
+        _tables.clear()
+        _tables_ctx = ctx
+    key = (name, params)
+    sigs = tuple(path_sig(p) for p in inputs)
+    hit = _tables.get(key)
+    if hit is not None and hit[0] == sigs:
+        return hit[1]
+    value = build()
+    _tables[key] = (sigs, value)
+    return value
+
+
+# --- leaf builds --------------------------------------------------------------
+
+_AQE = "spark.sql.adaptive.enabled"
+_aqe_lock = threading.Lock()
+_aqe_depth = 0
+_aqe_restore: tuple | None = None
+
+
+@contextmanager
+def aqe_off(spark: SparkSession):
+    """Run a leaf build with AQE off.
+
+    AQE re-plans the remaining DAG after every shuffle stage: pure
+    driver overhead for the fixed-shape leaf builds (~25 s of the alpha
+    build at sf0.1); the leaves are consumed with AQE restored. The
+    setting is session-global, and builds nest (`_ngram_pairs` →
+    `_shingles_table` → `checkpoint_sized`) and may overlap across
+    threads, so open regions are counted: the first to open saves the
+    prior value and turns AQE off, the last to close restores it. A
+    save/restore per region restores in the wrong order when two
+    regions overlap and leaves AQE off for the rest of the session. The
+    count is per process: a region opened on a second SparkSession while
+    another session's region is open leaves the second one's setting
+    alone."""
+    global _aqe_depth, _aqe_restore
+    with _aqe_lock:
+        if _aqe_depth == 0:
+            _aqe_restore = (spark, spark.conf.get(_AQE))
+            spark.conf.set(_AQE, "false")
+        _aqe_depth += 1
+    try:
+        yield
+    finally:
+        with _aqe_lock:
+            _aqe_depth -= 1
+            if _aqe_depth == 0:
+                owner, prior = _aqe_restore
+                owner.conf.set(_AQE, prior)
+
+
+def leaf_partitions(spark, n_rows: int, row_bytes: int, floor: int = 4) -> int:
+    """Data-sized partition count for a materialized leaf: ~64 MB of
+    rows per partition, floored at min(defaultParallelism, floor).
+
+    The floor exists because broadcast-BUILD chains over a leaf run at
+    leaf parallelism with no exchange to re-spread them (measured at
+    sf0.1, warm medians: cointegration_screen 8.7 s on a 1-partition
+    bars leaf, 1.9 s at 4); the ceiling-by-bytes exists because a
+    32-partition leaf of a 4 MB panel turns every one of a query's leaf
+    scans into 32 micro-tasks (cointegration_screen 6.0 s at 32). At
+    production scale the bytes term dominates and the floor never
+    binds. `row_bytes` is a per-row unsafe-format estimate used only for
+    SIZING, never correctness."""
+    return max(
+        min(spark.sparkContext.defaultParallelism, floor),
+        -(-n_rows * row_bytes // (64 << 20)),
+    )
+
+
+def checkpoint_sized(spark, df, row_bytes: int, floor: int = 4):
+    """Eager localCheckpoint re-materialized at `leaf_partitions` count.
+
+    A raw checkpoint leaf inherits shuffle.partitions from its build — a
+    core-count constant. The coalesce is RE-CHECKPOINTED because a lazy
+    Coalesce over raw blocks measured 1.7x slower than physically merged
+    blocks (interleaved A/B, same session). AQE is off for the build
+    jobs (re-planning overhead only; the leaf is consumed under AQE)."""
+    with aqe_off(spark):
+        leaf = df.localCheckpoint(eager=True)
+        target = leaf_partitions(spark, leaf.count(), row_bytes, floor)
+        if target < leaf.rdd.getNumPartitions():
+            leaf = leaf.coalesce(target).localCheckpoint(eager=True)
+        return leaf
 
 
 def tune_existing(spark: SparkSession) -> SparkSession:

@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import context_key
+from ..session import session_table
 
 TABLES = (
     "region",
@@ -52,35 +52,6 @@ DIM_TABLES = frozenset({"region", "nation"})
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Analyzed-plan memo: every `spark.read.parquet(path)` re-lists the path
-# and re-reads footers for schema inference — a driver-side job costing
-# 98-275 ms per call on this host (optimization guide §1/§6: file listing
-# and planning are driver-side, single-process work). Queries call
-# load_table 1-4x each, so a 293-query session re-derives the SAME
-# immutable schemas hundreds of times. The memo caches the analyzed
-# DataFrame (a lazy plan — NO data is cached; every execution still scans
-# parquet) keyed by (session, path, file stat signature), so a rewritten
-# file can never be served a stale plan and a new session never reuses a
-# dead JVM's plan. This is exactly what a catalog table (Hive/Iceberg
-# metadata) gives for free; bare-path reads have to memoize it here.
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
-
-
-def path_sig(path: str) -> tuple:
-    """Cheap content signature: (mtime_ns, size) of the file, or of every
-    direct child of a directory — an in-place rewrite changes it."""
-    try:
-        st = os.stat(path)
-        if not os.path.isdir(path):
-            return (st.st_mtime_ns, st.st_size)
-        with os.scandir(path) as it:
-            entries = sorted((e.name, e.stat().st_mtime_ns, e.stat().st_size) for e in it)
-        return tuple(entries)
-    except OSError:
-        # missing path: let the reader raise its own (Spark) error below
-        return ("<missing>",)
-
-
 def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
@@ -95,20 +66,27 @@ def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+# Analyzed-plan memo: every `spark.read.parquet(path)` re-lists the path
+# and re-reads footers for schema inference — a driver-side job costing
+# 98-275 ms per call on this host (optimization guide §1/§6: file listing
+# and planning are driver-side, single-process work). Queries call
+# load_table 1-4x each, so a 293-query session re-derives the SAME
+# immutable schemas hundreds of times. `load_table` keeps the analyzed
+# DataFrame (a lazy plan — NO data is cached; every execution still scans
+# parquet) in `session_table`, keyed on the file's stat signature, so a
+# rewritten file can never be served a stale plan and a new session never
+# reuses a dead JVM's plan. This is exactly what a catalog table
+# (Hive/Iceberg metadata) gives for free; bare-path reads have to
+# memoize it here.
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (context_key(spark), path, path_sig(path))
-    df = _PLAN_MEMO.get(key)
-    if df is None:
-        df = _read_table(spark, path, name)
-        # drop superseded signatures for the same (session, path) so a
-        # rewrite-heavy test session does not accumulate dead plans
-        for k in [k for k in _PLAN_MEMO if k[:2] == key[:2]]:
-            del _PLAN_MEMO[k]
-        _PLAN_MEMO[key] = df
-    return df
+    path = table_path(sf_dir, name)
+    return session_table(spark, "table", (path,), (path,), lambda: _read_table(spark, path, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

@@ -136,18 +136,21 @@ def test_bars_leaf_partitions_are_size_derived(spark):
     leaf serialized broadcast-build chains (8.7 s). The rule is
     ~64 MB/partition with a min(parallelism, 4) floor."""
     from quantitative_database_and_visualization_platform_spark.factors.panel import (
-        _leaf_partitions,
+        _BAR_ROW_BYTES,
+    )
+    from quantitative_database_and_visualization_platform_spark.session import (
+        leaf_partitions,
     )
 
     leaf = bars_table(spark, SF)
     n = leaf.count()
-    assert leaf.rdd.getNumPartitions() == _leaf_partitions(spark, n)
+    assert leaf.rdd.getNumPartitions() == leaf_partitions(spark, n, _BAR_ROW_BYTES)
     # floor binds at toy scale
-    assert _leaf_partitions(spark, n) == min(
+    assert leaf_partitions(spark, n, _BAR_ROW_BYTES) == min(
         spark.sparkContext.defaultParallelism, 4
     )
     # bytes term dominates at scale: 10B rows ≈ 1 TB of bar rows
-    assert _leaf_partitions(spark, 10_000_000_000) >= 10_000
+    assert leaf_partitions(spark, 10_000_000_000, _BAR_ROW_BYTES) >= 10_000
 
 
 def test_ivf_chain_memoizes_and_matches_raw_chain(spark):

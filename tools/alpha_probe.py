@@ -29,6 +29,7 @@ from quantitative_database_and_visualization_platform_spark.factors.panel import
 )
 from quantitative_database_and_visualization_platform_spark.plans import QUERIES
 from quantitative_database_and_visualization_platform_spark.session import (
+    aqe_off,
     checkpoint_sized,
     get_spark,
 )
@@ -78,12 +79,8 @@ def main() -> None:
     t_construct = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(spark):
         df = df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
     t_exec = time.perf_counter() - t0
 
     n = df.count()

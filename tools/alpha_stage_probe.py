@@ -25,8 +25,8 @@ from quantitative_database_and_visualization_platform_spark.factors.panel import
 )
 from quantitative_database_and_visualization_platform_spark.plans import QUERIES
 from quantitative_database_and_visualization_platform_spark.session import (
+    aqe_off,
     cpu_count,
-    get_spark,
 )
 
 
@@ -70,11 +70,10 @@ def main() -> None:
     )
     t_construct = time.perf_counter() - t0
 
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    t0 = time.perf_counter()
-    df = df.localCheckpoint(eager=True)
-    t_exec = time.perf_counter() - t0
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    with aqe_off(spark):
+        t0 = time.perf_counter()
+        df = df.localCheckpoint(eager=True)
+        t_exec = time.perf_counter() - t0
 
     app_id = spark.sparkContext.applicationId
     url = f"http://localhost:4040/api/v1/applications/{app_id}/stages?status=complete"
